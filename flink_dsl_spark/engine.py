@@ -23,7 +23,7 @@ from .functions import FunctionRegistry
 from .parser import parse, parse_many
 from .planner import Planner
 from .resolver import Resolver
-from .session import get_session
+from .session import _REQUIRED_CONFS, get_session
 from .timer import Timer
 
 # Extension -> reader format.  "tsv" is resolved to csv + tab separator
@@ -34,27 +34,6 @@ _EXT_FORMAT = {".parquet": "parquet", ".csv": "csv", ".tsv": "tsv",
                ".json": "json", ".jsonl": "json", ".ndjson": "json",
                ".txt": "text", ".text": "text"}
 _COMPRESSION_EXTS = (".gz", ".zst", ".bz2", ".deflate", ".snappy")
-
-# Runtime-settable SQL confs the engine's results depend on.  They are
-# applied to whatever SparkSession the caller hands us (callers are NOT
-# required to build their session via session.get_session):
-#  - nanosAsLong: older driver testdata was parquet TIMESTAMP(NANOS);
-#    without this, spark.read.parquet raises PARQUET_TYPE_ILLEGAL.
-#  - inferTimestampNTZ disabled: parquet micros WITHOUT a timezone
-#    annotation (isAdjustedToUTC=false — what the driver testdata ships
-#    now) would otherwise load as TIMESTAMP_NTZ, which Structured
-#    Streaming watermarks reject and several epoch-arithmetic paths
-#    can't cast.  With the session timezone forced to UTC the LTZ
-#    reading denotes the same wall clock, so this is lossless.
-#  - UTC session timezone: window bounds and make_timestamp-based
-#    oracles assume UTC.
-#  - Arrow: pandas-UDF paths (llm_ops) use Arrow batch transfer.
-_REQUIRED_CONFS = {
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-}
 
 
 def _warehouse_leftover(wh: str, name: str) -> Optional[str]:

@@ -323,9 +323,9 @@ def priority_sample_stratified(df: DataFrame, id_col: str,
                       .alias("samp_priority")))
     win = (Window.partitionBy(stratum_col)
                  .orderBy("samp_priority", F.col(id_col)))
-    rn = "__pss_rn"
-    while rn in base.columns:
-        rn += "_"
+    from ..streaming.windows import fresh_namer
+    fresh = fresh_namer(base.columns)
+    rn = fresh("__pss_rn")
     ranked = base.withColumn(rn, F.row_number().over(win))
     if not with_estimate:
         return (ranked.filter(F.col(rn) <= k).drop(rn)
@@ -340,9 +340,7 @@ def priority_sample_stratified(df: DataFrame, id_col: str,
     # REPLACES a same-named user column); w_est is the documented
     # OUTPUT name, so a clashing input column is an error, not a
     # silent overwrite
-    tau = rn + "_tau"
-    while tau in base.columns:
-        tau += "_"
+    tau = fresh(rn + "_tau")
     if "w_est" in base.columns:
         raise ValueError(
             "with_estimate=True writes a 'w_est' column — rename the "
@@ -411,7 +409,7 @@ def token_budget_filter(df: DataFrame, id_col: str, tokens_col: str,
     straddle the cut."""
     if id_hash is None:
         id_hash = _xxhash_id
-    from ..streaming.windows import _range_bucket
+    from ..streaming.windows import _range_bucket, fresh_namer
     from pyspark.sql.window import Window as W
 
     spark = df.sparkSession
@@ -420,17 +418,9 @@ def token_budget_filter(df: DataFrame, id_col: str, tokens_col: str,
     # bookkeeping names must not shadow an input column — withColumn
     # silently REPLACES same-named columns, which would corrupt a user
     # frame that happens to carry e.g. "__tb_key" through the hint path
-    taken = set(df.columns)
-
-    def _fresh(base: str) -> str:
-        name, i = base, 0
-        while name in taken:
-            i += 1
-            name = f"{base}{i}"
-        taken.add(name)
-        return name
-    key, bkt, off, n = (_fresh("__tb_key"), _fresh("__tb_bkt"),
-                        _fresh("__tb_off"), _fresh("__tb_n"))
+    fresh = fresh_namer(df.columns)
+    key, bkt, off, n = (fresh("__tb_key"), fresh("__tb_bkt"),
+                        fresh("__tb_off"), fresh("__tb_n"))
     d = df.withColumn(key, id_hash(F.col(id_col), seed)) \
           .withColumn(n, F.col(tokens_col).cast("long"))
     # the order key is a seeded hash with a statically-known codomain,
@@ -448,7 +438,7 @@ def token_budget_filter(df: DataFrame, id_col: str, tokens_col: str,
     off_df = _lazy_prefix_offsets(d, bkt, F.sum(n), off)
     w = (W.partitionBy(bkt).orderBy(key, id_col)
           .rowsBetween(W.unboundedPreceding, W.currentRow))
-    cum = cum_col or _fresh("__tb_cum")
+    cum = cum_col or fresh("__tb_cum")
     out = (d.join(F.broadcast(off_df), bkt)
             .filter(F.col(off) <= F.lit(int(budget)))
             .withColumn(cum,

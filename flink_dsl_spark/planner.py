@@ -9,10 +9,25 @@ zero custom optimizer rules by design).
 Key mechanics:
   * every base relation is ``df.alias(binding)`` so qualified column refs
     compile to ``F.col("binding.name")``;
+  * ``Planner._compile`` is the only AST -> Column compiler.  Contexts
+    that swap an AST node for an already computed column install a
+    substitution scope (``_Scope``, via ``Planner._scoped``) that
+    ``_compile`` checks first at every node; keys match by AST
+    equality.  The scope maps:
+      - a grouping expression -> ``__g{i}``;
+      - an aggregate call -> its aggregate over the pre-projected
+        ``__a{j}`` arguments, or after grouping its hidden ``__w{n}``
+        output (deferred window items and QUALIFY);
+      - a streaming running-OVER window function -> its column from
+        the stateful pass (and a count-window aggregate -> its
+        stateful output);
+      - an unbound QUALIFY alias -> its hidden column.
+    A grouped scope rejects any bare column it does not cover;
   * aggregation uses a two-phase compile: pre-project grouping exprs as
-    ``__g{i}`` and aggregate arguments as ``__a{j}``, then groupBy/rollup
-    over the hidden columns — HAVING and ORDER BY compile in the same
-    aggregate context (SQL semantics, evaluated per group);
+    ``__g{i}`` and each distinct aggregate call's arguments as
+    ``__a{j}``, then groupBy/rollup over the hidden columns — items,
+    HAVING and ORDER BY compile in the same grouped scope (SQL
+    semantics, evaluated per group);
   * FSQL window specs (fsql/Ast.scala:132-136) compile to:
       - time windows  -> F.window(tcol, size, every)   [Spark-native]
       - count windows -> row_number / exploded trigger buckets
@@ -20,19 +35,27 @@ Key mechanics:
     batch emulation documented in streaming/windows.py;
   * statements containing subqueries in expression position (IN/EXISTS/
     scalar) compile via SQL-text generation -> spark.sql, which is the
-    documented Spark primitive for decorrelation (SURVEY.md §2.2).
+    documented Spark primitive for decorrelation (SURVEY.md §2.2).  A
+    DataFrame-native form (``Column.exists()``, ``.isin(df)``,
+    ``DataFrame.scalar()``) was measured against it and stays out:
+    classic ``Dataset.groupBy`` analyses eagerly and rejects an outer
+    reference, so correlated aggregates such as TPC-H Q17 cannot be
+    built at all, and warm plan time rose 2-9x on the queries that did
+    build (q65 20 -> 172 ms, q67 29 -> 193 ms; py4j calls 3 -> 492/584).
 """
 
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
+from functools import partial
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .ast_nodes import (
-    Between, BinOp, Case, Cast, Col, CreateSchema, CreateStream, Delete,
+    Between, BinOp, Case, Cast, Col, Delete,
     DerivedTable, Exists, FuncCall, InList, InSubquery, Insert,
     QuantifiedCmp, SCORE_HINTS,
     IntervalLit, IsNull, Join, Lit, OrderItem, Param, ScalarSubquery,
@@ -44,7 +67,8 @@ from .ast_nodes import (
 )
 from .errors import PlanError, UnsupportedError
 from .functions import FunctionRegistry
-from .streaming.windows import last_window_filter, window_grouping
+from .streaming.windows import (fresh_namer, last_window_filter,
+                                window_grouping)
 
 
 def _select_has_subquery(sel) -> bool:
@@ -73,20 +97,22 @@ def _expr_subqueries(sel):
     for opt in (sel.where, sel.having, sel.qualify):
         if opt is not None:
             exprs.append(opt)
-    if sel.from_ is not None:
-        def join_conds(rel):
-            if isinstance(rel, Join):
-                yield from join_conds(rel.left)
-                yield from join_conds(rel.right)
-                if rel.on is not None:
-                    yield rel.on
-        exprs.extend(join_conds(sel.from_))
+    exprs.extend(_join_conditions(sel.from_))
     for e in exprs:
         if isinstance(e, Star):
             continue
         for x in walk_expr(e):
             if isinstance(x, (InSubquery, Exists, ScalarSubquery, QuantifiedCmp)):
                 yield x.query
+
+
+def _join_conditions(rel):
+    """Yield the ON predicate of every join in a relation tree."""
+    if isinstance(rel, Join):
+        yield from _join_conditions(rel.left)
+        yield from _join_conditions(rel.right)
+        if rel.on is not None:
+            yield rel.on
 
 
 def _query_has_hints(q) -> bool:
@@ -128,15 +154,27 @@ class Planner:
         # keys are POPPED as their join consumes them (plan_select
         # errors on leftovers so a typo'd key can't silently no-op)
         self._salt_specs: dict = {}
-        # QUALIFY alias substitution: lowercase projection alias ->
-        # hidden column holding the computed item, active only while
-        # the QUALIFY predicate compiles (empty otherwise)
-        self._qualify_aliases: dict = {}
-        # streaming running-aggregate substitution: id(WindowFunc) ->
-        # column already computed by the stateful running_agg pass
-        # (populated by _plan_streaming_over, consulted by
-        # _compile_window_func before its batch-only guard)
-        self._stream_wf_cols: dict = {}
+        # the substitution scope _compile consults first (_Scope);
+        # None outside a _scoped block
+        self._scope: Optional[_Scope] = None
+
+    @contextmanager
+    def _scoped(self, subs=(), aliases=None, grouped=False):
+        """Compile the block's expressions under a substitution scope
+        layered over the enclosing one (a streaming-OVER QUALIFY
+        predicate sees both the running columns and the aliases).  The
+        previous scope is restored on any exit, so a failed plan leaves
+        no residue for the next statement."""
+        prev = self._scope
+        if prev is not None:
+            subs = list(subs) + prev.subs
+            aliases = {**prev.aliases, **(aliases or {})}
+            grouped = grouped or prev.grouped
+        self._scope = _Scope(subs, aliases, grouped)
+        try:
+            yield
+        finally:
+            self._scope = prev
 
     # ------------------------------------------------------------------
     # statement dispatch
@@ -494,18 +532,6 @@ class Planner:
         grouping/HAVING over the aggregated rows — _plan_aggregate's
         deferred win_specs).  WHERE/GROUP BY/HAVING evaluate before
         windows exist; ORDER BY can reference a window item's alias."""
-        def has_win(exprs):
-            return any(isinstance(x, WindowFunc)
-                       for e in exprs if not isinstance(e, Star)
-                       for x in walk_expr(e))
-
-        def join_conds(rel):
-            if isinstance(rel, Join):
-                yield from join_conds(rel.left)
-                yield from join_conds(rel.right)
-                if rel.on is not None:
-                    yield rel.on
-
         for pos, exprs in (("WHERE", [sel.where] if sel.where is not None
                             else []),
                            ("GROUP BY", sel.group_by),
@@ -513,9 +539,9 @@ class Planner:
                             else []),
                            ("ORDER BY", [o.expr for o in sel.order_by]),
                            ("a JOIN condition",
-                            list(join_conds(sel.from_))
-                            if sel.from_ is not None else [])):
-            if has_win(exprs):
+                            list(_join_conditions(sel.from_)))):
+            if any(_expr_contains_winfunc(e) for e in exprs
+                   if not isinstance(e, Star)):
                 raise PlanError(
                     f"window functions are not allowed in {pos} "
                     "(project them in a derived table first)")
@@ -584,11 +610,8 @@ class Planner:
         """Shared streaming-OVER routing for the plain and QUALIFY
         projection paths: collect window functions from the select
         items (plus ``extra_exprs``, e.g. the QUALIFY predicate),
-        run the stateful pass, then compile ``body`` with the
-        id()-keyed substitution map scoped to THIS select — ids
-        recycle once an AST is collected, so a leaked entry could
-        poison a later plan's window compile (the r9 review's bug
-        class; one copy of the clear discipline lives here)."""
+        run the stateful pass, then compile ``body`` in a scope that
+        maps each window function to its running column."""
         if df.isStreaming:
             wfs = [x for item in sel.items
                    if not isinstance(item.expr, Star)
@@ -597,11 +620,9 @@ class Planner:
             wfs += [x for e in extra_exprs if e is not None
                     for x in walk_expr(e) if isinstance(x, WindowFunc)]
             if wfs:
-                df = self._plan_streaming_over(sel, df, wfs)
-                try:
+                df, wf_cols = self._plan_streaming_over(sel, df, wfs)
+                with self._scoped(wf_cols):
                     return body(df)
-                finally:
-                    self._stream_wf_cols = {}
         return body(df)
 
     def _plan_projection_items(self, sel: Select, df: DataFrame,
@@ -629,7 +650,8 @@ class Planner:
         as hidden ``__s{i}`` columns (withColumn keeps the input frame's
         columns and binding qualifiers available to the predicate);
         alias references in the predicate resolve to those hidden
-        columns via _qualify_aliases, so the window is computed once.
+        columns through the compile scope, so the window is computed
+        once.
 
         Scale shape: identical to the same query through a derived
         table — the window's hash shuffle on its partition keys, then a
@@ -659,12 +681,8 @@ class Planner:
             qdf = qdf.withColumn(h, self._compile(item.expr, df))
             specs.append(("col", (h, name)))
             alias_map.setdefault(name.lower(), h)
-        prev = self._qualify_aliases
-        self._qualify_aliases = alias_map
-        try:
+        with self._scoped(aliases=alias_map):
             pred = self._compile(sel.qualify, qdf)
-        finally:
-            self._qualify_aliases = prev
         qdf = qdf.withColumn("__qual", pred).filter(F.col("__qual"))
 
         cols: list[Column] = []
@@ -813,24 +831,18 @@ class Planner:
                 group_exprs.append(p)
                 g_names.append(f"__g{len(g_names)}")
 
-        # collect aggregate calls from items / having / order-by
+        # collect the distinct aggregate calls of items / having /
+        # qualify / order-by (``in`` compares by AST equality)
         agg_calls: list[FuncCall] = []
-
-        def collect(e):
+        for e in [it.expr for it in sel.items
+                  if not isinstance(it.expr, Star)] \
+                + [e for e in (sel.having, sel.qualify) if e is not None] \
+                + [o.expr for o in sel.order_by]:
             for x in walk_expr(e):
-                if isinstance(x, FuncCall) and self.registry.is_aggregate(x.name):
-                    if not any(x is a for a in agg_calls):
-                        agg_calls.append(x)
-
-        for item in sel.items:
-            if not isinstance(item.expr, Star):
-                collect(item.expr)
-        if sel.having is not None:
-            collect(sel.having)
-        if sel.qualify is not None:
-            collect(sel.qualify)
-        for o in sel.order_by:
-            collect(o.expr)
+                if isinstance(x, FuncCall) \
+                        and self.registry.is_aggregate(x.name) \
+                        and x not in agg_calls:
+                    agg_calls.append(x)
 
         # pre-projection: grouping exprs + agg argument exprs
         pre_cols: list[Column] = [F.col("*")]
@@ -839,10 +851,12 @@ class Planner:
         # each aggregate argument either pre-projects as a hidden column
         # or stays a foldable literal (percentile fractions, accuracy
         # knobs etc. must remain literals for Catalyst to accept them)
-        arg_names: dict[int, Optional[list]] = {}
+        group_subs = list(zip(group_exprs, g_names))
+        agg_subs: list[tuple] = []
         for j, call in enumerate(agg_calls):
             if not call.args or isinstance(call.args[0], Star):
-                arg_names[id(call)] = None          # count(*)
+                agg_subs.append((call, partial(self._aggregate, call,
+                                               None)))       # count(*)
                 continue
             specs: list[tuple[str, object]] = []
             for k, arg in enumerate(call.args):
@@ -854,7 +868,7 @@ class Planner:
                     a = f"__a{j}_{k}" if k else f"__a{j}"
                     pre_cols.append(self._compile(arg, df).alias(a))
                     specs.append(("col", a))
-            arg_names[id(call)] = specs
+            agg_subs.append((call, partial(self._aggregate, call, specs)))
 
         pre = df.select(*pre_cols)
 
@@ -876,10 +890,14 @@ class Planner:
         else:
             gdf = pre.groupBy()
 
-        # compile output/having/order in aggregate context
+        # compile output/having/order per group: grouping expressions
+        # -> __g{i}, aggregate calls -> aggregates over __a{j}
+        def per_group(e) -> Column:
+            with self._scoped(group_subs + agg_subs, grouped=True):
+                return self._compile(e, None)
+
         agg_exprs: list[Column] = []
         out_specs: list[tuple[str, str]] = []   # (hidden_name, out_name)
-        ctx = _AggContext(self, group_exprs, g_names, agg_calls, arg_names)
 
         win_specs: list[tuple[str, object]] = []   # (hidden_name, expr)
         for i, item in enumerate(sel.items):
@@ -896,7 +914,7 @@ class Planner:
                 win_specs.append((h, item.expr))
                 out_specs.append((h, name))
                 continue
-            agg_exprs.append(ctx.compile(item.expr).alias(name))
+            agg_exprs.append(per_group(item.expr).alias(name))
             out_specs.append((name, name))
         # materialize every aggregate call a deferred window item — or
         # the QUALIFY predicate — uses (walk_expr skips the window's
@@ -913,7 +931,7 @@ class Planner:
                         and self.registry.is_aggregate(x.name) \
                         and not any(x == c for c, _ in win_agg_cols):
                     h = f"__w{len(win_agg_cols)}"
-                    agg_exprs.append(ctx.compile(x).alias(h))
+                    agg_exprs.append(per_group(x).alias(h))
                     win_agg_cols.append((x, h))
         for wname, wcol in win_out:
             out_specs.append((wname, wname))
@@ -921,7 +939,7 @@ class Planner:
         having_name = None
         if sel.having is not None:
             having_name = "__having"
-            agg_exprs.append(ctx.compile(sel.having).alias(having_name))
+            agg_exprs.append(per_group(sel.having).alias(having_name))
 
         order_specs: list[tuple[Column, OrderItem]] = []
         # ORDER BY aliases resolve to the HIDDEN column holding each
@@ -944,7 +962,7 @@ class Planner:
                     (F.col(lower_names[o.expr.name.lower()]), o))
             else:
                 h = f"__ord{k}"
-                agg_exprs.append(ctx.compile(o.expr).alias(h))
+                agg_exprs.append(per_group(o.expr).alias(h))
                 order_specs.append((F.col(h), o))
 
         if not agg_exprs:
@@ -958,29 +976,51 @@ class Planner:
 
         if having_name:
             res = res.filter(F.col(having_name))
-        if win_specs or sel.qualify is not None:
-            post = _PostAggContext(self, group_exprs, g_names,
-                                   win_agg_cols, res)
+        # deferred window items and QUALIFY compile over the aggregated
+        # frame: grouping expressions -> __g{i}, aggregate calls -> the
+        # __w{n} outputs — the ANSI evaluation order for
+        # `rank() over (order by sum(x)) … group by g`
+        post_subs = group_subs + win_agg_cols
+        with self._scoped(post_subs, grouped=True):
             for h, wexpr in win_specs:
-                res = res.withColumn(h, post.compile(wexpr))
-            if sel.qualify is not None:
-                # QUALIFY over an aggregating query: evaluated after
-                # grouping/HAVING and the deferred window items, before
-                # ORDER BY/LIMIT (ANSI order).  Alias references
-                # resolve to the hidden column holding each output.
-                post.alias_map = {out.lower(): hid
-                                  for hid, out in out_specs}
-                try:
-                    res = res.withColumn(
-                        "__qual", post.compile(sel.qualify))
-                finally:
-                    post.alias_map = None
-                res = res.filter(F.col("__qual"))
+                res = res.withColumn(h, self._compile(wexpr, res))
+        if sel.qualify is not None:
+            # QUALIFY over an aggregating query: evaluated after
+            # grouping/HAVING and the deferred window items, before
+            # ORDER BY/LIMIT (ANSI order).  Alias references resolve
+            # to the hidden column holding each output.
+            with self._scoped(post_subs, grouped=True, aliases={
+                    out.lower(): hid for hid, out in out_specs}):
+                res = res.withColumn(
+                    "__qual", self._compile(sel.qualify, res))
+            res = res.filter(F.col("__qual"))
         if order_specs:
             res = res.orderBy(*[_sorted_col(c, o)
                                 for c, o in order_specs])
         return res.select(*[F.col(hid).alias(out)
                             for hid, out in out_specs])
+
+    def _aggregate(self, call: FuncCall, specs: Optional[list]) -> Column:
+        """The aggregate for ``call`` over its pre-projected arguments:
+        ``specs`` lists ("col", hidden_name) / ("lit", value) per
+        argument, None for count(*)."""
+        name = call.name.lower()
+        if specs is None:                        # count(*)
+            return F.count(F.lit(1))
+        if call.distinct:
+            if len(specs) != 1 or specs[0][0] != "col":
+                raise PlanError(
+                    f"{name}(DISTINCT ...) takes one column argument")
+            hidden = specs[0][1]
+            if name == "count":
+                return F.countDistinct(F.col(hidden))
+            if name == "sum":
+                return F.sum_distinct(F.col(hidden))
+            # general distinct aggregate over a named hidden column
+            return F.expr(f"{name}(DISTINCT {hidden})")
+        args = [F.col(v) if kind == "col" else F.lit(v)
+                for kind, v in specs]
+        return self.registry.build(name, args)
 
     # ------------------------------------------------------------------
     # INSERT (append semantics; flinkdsl/ast.scala:154-161,
@@ -1232,9 +1272,7 @@ class Planner:
                     "more than one distinct source row — deduplicate "
                     "the source on the ON keys first")
 
-        mk = "__mg_hit"
-        while mk in srcd.columns:
-            mk += "_"
+        mk = fresh_namer(srcd.columns)("__mg_hit")
 
         def compile_assigns(assigns, what: str, sides=("t", "s")):
             if assigns == "*":
@@ -1572,9 +1610,9 @@ class Planner:
                             "column)")
 
         # harvest aggregate calls from items + having; map each distinct
-        # call to a stateful output column
+        # call (AST equality) to a stateful output column
         aggs: list[tuple] = []
-        call_alias: dict[int, str] = {}
+        call_alias: list[tuple] = []        # (FuncCall, output column)
         count_aliases: set = set()
         needs_ones = False
 
@@ -1584,7 +1622,7 @@ class Planner:
                 if not (isinstance(x, FuncCall)
                         and self.registry.is_aggregate(x.name)):
                     continue
-                if id(x) in call_alias:
+                if any(x == c for c, _ in call_alias):
                     continue
                 fn = x.name.lower()
                 if fn not in ("sum", "count", "min", "max", "avg"):
@@ -1604,7 +1642,7 @@ class Planner:
                     raise PlanError(
                         "streaming count-window aggregates take a plain "
                         "column argument")
-                call_alias[id(x)] = alias
+                call_alias.append((x, alias))
 
         for item in sel.items:
             if isinstance(item.expr, Star):
@@ -1641,62 +1679,24 @@ class Planner:
         for alias in count_aliases:
             out = out.withColumn(alias, F.col(alias).cast("long"))
 
-        def compile_post(e) -> Column:
-            """Compile an item/having expression over the stateful output:
-            agg calls -> their output columns; Cols must be keys."""
-            a = call_alias.get(id(e))
-            if a is not None:
-                return F.col(a)
-            if isinstance(e, Col):
-                if e.name not in keys:
-                    raise PlanError(
-                        f"column {e.name!r} is not a grouping key of the "
-                        "streaming count window")
-                return F.col(e.name)
-            if isinstance(e, Lit):
-                return F.lit(e.value)
-            if isinstance(e, Param):
-                return F.lit(self._bind_param(e))
-            if isinstance(e, BinOp):
-                return _apply_binop(e.op, compile_post(e.left),
-                                    compile_post(e.right))
-            if isinstance(e, UnOp):
-                x = compile_post(e.operand)
-                return {"not": lambda: ~x, "-": lambda: -x,
-                        "~": lambda: F.bitwise_not(x)}[e.op]()
-            if isinstance(e, Case):
-                c = None
-                for w, v in e.whens:
-                    wc, vc = compile_post(w), compile_post(v)
-                    c = F.when(wc, vc) if c is None else c.when(wc, vc)
-                return c.otherwise(compile_post(e.else_)) \
-                    if e.else_ is not None else c
-            if isinstance(e, Between):
-                x = compile_post(e.expr).between(compile_post(e.lo),
-                                                 compile_post(e.hi))
-                return ~x if e.negated else x
-            if isinstance(e, IsNull):
-                x = compile_post(e.expr)
-                return x.isNotNull() if e.negated else x.isNull()
-            if isinstance(e, InList):
-                x = compile_post(e.expr).isin(
-                    *[compile_post(i) for i in e.items])
-                return ~x if e.negated else x
-            if isinstance(e, FuncCall):
-                return self.registry.build(
-                    e.name, [compile_post(a2) for a2 in e.args])
-            raise PlanError(
-                f"{type(e).__name__} is not supported in a streaming "
-                "count-window projection")
-
-        final = [compile_post(item.expr).alias(_item_name(item, i))
-                 for i, item in enumerate(sel.items)]
-        final.append(F.col(win_col))
-        if sel.having is not None:
-            return (out.select(*final,
-                               compile_post(sel.having).alias("__hav"))
-                    .filter(F.col("__hav")).drop("__hav"))
-        return out.select(*final)
+        # items and HAVING compile over the stateful output: aggregate
+        # calls -> their output columns, key columns -> their
+        # (unqualified) output names, any other column is rejected
+        key_cols = [(x, x.name)
+                    for e in [it.expr for it in sel.items] + [sel.having]
+                    if e is not None
+                    for x in walk_expr(e)
+                    if isinstance(x, Col) and x.name in keys]
+        with self._scoped(call_alias + key_cols, grouped=True):
+            final = [self._compile(item.expr, None)
+                     .alias(_item_name(item, i))
+                     for i, item in enumerate(sel.items)]
+            final.append(F.col(win_col))
+            if sel.having is None:
+                return out.select(*final)
+            having = self._compile(sel.having, None).alias("__hav")
+        return (out.select(*final, having)
+                .filter(F.col("__hav")).drop("__hav"))
 
     def _ensure_watermark(self, df: DataFrame, leaf,
                           spec: WindowSpec) -> DataFrame:
@@ -1887,9 +1887,7 @@ class Planner:
         hint's input rows, appending it as ``score_col`` — the shared
         join-back tail of every SCORE_HINTS hint (one broadcast hash
         join; the corpus is never shuffled)."""
-        join_id = f"__{hint}_id"
-        while join_id in df.columns:
-            join_id += "_"
+        join_id = fresh_namer(df.columns)(f"__{hint}_id")
         scores = F.broadcast(
             scores.select(F.col("id").alias(join_id),
                           F.col(value_col).alias(score_col)))
@@ -2015,9 +2013,8 @@ class Planner:
         w = F.col(wc).cast("double")
         # collision-free bookkeeping name — withColumn silently
         # REPLACES a same-named user column (the __tb_* lesson)
-        pri = "__ps_pri"
-        while pri in df.columns:
-            pri += "_"
+        fresh = fresh_namer(df.columns)
+        pri = fresh("__ps_pri")
         base = (df.filter(w.isNotNull() & (w > 0)
                           & F.col(idc).isNotNull())
                   .withColumn(pri, dlt_priority(idc, wc, 42,
@@ -2028,9 +2025,7 @@ class Planner:
 
         (sc,) = self._resolve_hint_cols(df, (stratcol,),
                                         "priority_sample")
-        rn = pri + "_rn"
-        while rn in df.columns:
-            rn += "_"
+        rn = fresh(pri + "_rn")
         win = Window.partitionBy(sc).orderBy(pri, F.col(idc))
         return (base.withColumn(rn, F.row_number().over(win))
                     .filter(F.col(rn) <= k).drop(pri, rn))
@@ -2254,10 +2249,22 @@ class Planner:
         return self._compile(e, None)
 
     # ------------------------------------------------------------------
-    # expression compilation (non-aggregate context)
+    # expression compilation
     # ------------------------------------------------------------------
 
     def _compile(self, e, df: Optional[DataFrame]) -> Column:
+        """The one AST -> Column compiler.  The active scope (_Scope)
+        is checked first at every node; ``df`` is the frame window
+        functions run over and parameters take their type from."""
+        scope = self._scope
+        if scope is not None:
+            sub = scope.find(e)
+            if sub is not None:
+                return F.col(sub) if isinstance(sub, str) else sub()
+            if scope.grouped and isinstance(e, Col):
+                raise PlanError(
+                    f"column {e.name!r} must appear in GROUP BY or "
+                    "inside an aggregate function")
         if isinstance(e, Lit):
             return F.lit(e.value)
         if isinstance(e, Param):
@@ -2265,10 +2272,6 @@ class Planner:
         if isinstance(e, Col):
             if e.binding is not None:
                 return F.col(f"{e.binding}.{e.name}")
-            if self._qualify_aliases:
-                hid = self._qualify_aliases.get(e.name.lower())
-                if hid is not None:
-                    return F.col(hid)
             return F.col(e.name)
         if isinstance(e, BinOp):
             return self._compile_binop(e, df)
@@ -2356,10 +2359,12 @@ class Planner:
 
     def _param_lit(self, p: Param, other, df) -> Column:
         """Bind a parameter, casting it to the compared column's type
-        when that type is resolvable from the frame in scope."""
+        when that type is resolvable from the frame in scope (a column
+        the compile scope substitutes is not a frame column)."""
         lit = F.lit(self._bind_param(p))
         if df is not None and isinstance(other, Col) \
-                and other.binding is None:
+                and other.binding is None \
+                and (self._scope is None or self._scope.find(other) is None):
             dt = dict(df.dtypes).get(other.name)
             if dt is not None:
                 lit = lit.cast(dt)
@@ -2367,9 +2372,9 @@ class Planner:
 
     def _compile_func(self, e: FuncCall, df) -> Column:
         if self.registry.is_aggregate(e.name):
-            # aggregate in a non-aggregate context: only valid for
-            # count(*) style full-table aggregates — handled by agg path;
-            # reaching here means misuse
+            # the aggregate path's grouped scope substitutes every
+            # aggregate call it collected; one reaching here sits
+            # where no aggregation happens
             raise PlanError(
                 f"aggregate function {e.name}() used outside aggregation")
         args = [self._compile(a, df) for a in e.args]
@@ -2434,8 +2439,10 @@ class Planner:
 
         Scale shape: ONE keyed state shuffle (the applyInPandasWithState
         exchange); state per key is O(1) scalars, independent of
-        stream length.  Substitutions land in ``_stream_wf_cols`` so
-        the normal projection compile picks the computed columns up."""
+        stream length.  Returns the stateful output and the
+        (window function, column) substitutions the projection then
+        compiles under; structurally equal window functions share one
+        running column."""
         from .streaming import running_agg
 
         def plain_col(x, what):
@@ -2466,7 +2473,7 @@ class Planner:
             for prev, name in expr_keys:
                 if prev == x:
                     return name
-            name = _fresh(f"__rw_key{len(expr_keys)}")
+            name = fresh(f"__rw_key{len(expr_keys)}")
             expr_keys.append((x, name))
             hidden.append((name, x))
             return name
@@ -2492,32 +2499,26 @@ class Planner:
         rownum_casts: list[str] = []        # long outputs -> int
         hidden: list[tuple] = []            # (name, Expr) inputs to add
         hidden_keep: set = set()            # hidden cols that ARE outputs
-        wf_map: dict[int, str] = {}         # installed only on success
+        wf_cols: list[tuple] = []           # (WindowFunc, column name)
 
         # bookkeeping names must not shadow a stream column — a user
         # column named __rw_out0 would duplicate in running_agg's
         # output schema, and withColumn would silently replace a
         # __rw_in0 (the same collision class token_budget_filter
         # guards against)
-        taken = set(df.columns)
-
-        def _fresh(base: str) -> str:
-            name, n = base, 0
-            while name in taken:
-                n += 1
-                name = f"{base}_{n}"
-            taken.add(name)
-            return name
+        fresh = fresh_namer(df.columns)
 
         def _input_col(arg, what: str, i: int) -> str:
             """Resolve a window function's input: a plain column by
             name, anything else via a kept-hidden computed column."""
             if isinstance(arg, Col):
                 return plain_col(arg, what)
-            name = _fresh(f"__rw_in{i}")
+            name = fresh(f"__rw_in{i}")
             hidden.append((name, arg))
             return name
         for i, e in enumerate(wfs):
+            if any(e == prev for prev, _ in wf_cols):
+                continue
             name = e.func.name
             if e.ignore_nulls:
                 # same applicability rule as batch (lead then hits its
@@ -2594,10 +2595,10 @@ class Planner:
                 # shared ascending order; cast to int after the
                 # stateful pass for batch-dtype parity (Spark
                 # row_number is IntegerType, the stateful count long)
-                out_name = _fresh(f"__rw_out{i}")
+                out_name = fresh(f"__rw_out{i}")
                 aggs.append(("count", None, out_name))
                 rownum_casts.append(out_name)
-                wf_map[id(e)] = out_name
+                wf_cols.append((e, out_name))
                 continue
             if is_rank:
                 if args:
@@ -2608,10 +2609,10 @@ class Planner:
                 # O(1) (stateful.py running_agg ranks).  Long out of
                 # the stateful pass, cast to int for batch-dtype
                 # parity like row_number.
-                out_name = _fresh(f"__rw_out{i}")
+                out_name = fresh(f"__rw_out{i}")
                 ranks.append((name, out_name))
                 rownum_casts.append(out_name)
-                wf_map[id(e)] = out_name
+                wf_cols.append((e, out_name))
                 continue
             if is_lag:
                 if not 1 <= len(args) <= 3:
@@ -2638,16 +2639,16 @@ class Planner:
                 if isinstance(args[0], Star):
                     raise PlanError("lag(*) is not valid")
                 in_col = _input_col(args[0], "lag() argument", i)
-                out_name = _fresh(f"__rw_out{i}")
+                out_name = fresh(f"__rw_out{i}")
                 offsets.append((in_col, off, dflt, out_name,
                                 e.ignore_nulls))
-                wf_map[id(e)] = out_name
+                wf_cols.append((e, out_name))
                 continue
             if is_first:
                 in_col = _input_col(args[0], "first_value() argument", i)
-                out_name = _fresh(f"__rw_out{i}")
+                out_name = fresh(f"__rw_out{i}")
                 firsts.append((in_col, out_name, e.ignore_nulls))
-                wf_map[id(e)] = out_name
+                wf_cols.append((e, out_name))
                 continue
             if is_nth:
                 n = _plain_literal(args[1])
@@ -2657,9 +2658,9 @@ class Planner:
                         "nth_value() n must be a positive integer "
                         "literal")
                 in_col = _input_col(args[0], "nth_value() argument", i)
-                out_name = _fresh(f"__rw_out{i}")
+                out_name = fresh(f"__rw_out{i}")
                 nths.append((in_col, n, out_name, e.ignore_nulls))
-                wf_map[id(e)] = out_name
+                wf_cols.append((e, out_name))
                 continue
             if is_last:
                 if e.ignore_nulls:
@@ -2668,22 +2669,22 @@ class Planner:
                     # value per key), unlike the respect-nulls form
                     in_col = _input_col(
                         args[0], "last_value() argument", i)
-                    out_name = _fresh(f"__rw_out{i}")
+                    out_name = fresh(f"__rw_out{i}")
                     lasts.append((in_col, out_name))
-                    wf_map[id(e)] = out_name
+                    wf_cols.append((e, out_name))
                     continue
                 # over the running ROWS frame, last_value(x) IS the
                 # current row's x — no state needed: map the window
                 # function at the input column (or a kept hidden
                 # column for expressions)
                 if isinstance(args[0], Col):
-                    wf_map[id(e)] = plain_col(args[0],
-                                              "last_value() argument")
+                    wf_cols.append((e, plain_col(
+                        args[0], "last_value() argument")))
                 else:
-                    out_name = _fresh(f"__rw_out{i}")
+                    out_name = fresh(f"__rw_out{i}")
                     hidden.append((out_name, args[0]))
                     hidden_keep.add(out_name)
-                    wf_map[id(e)] = out_name
+                    wf_cols.append((e, out_name))
                 continue
             if args and isinstance(args[0], Star):
                 if name != "count":
@@ -2694,9 +2695,9 @@ class Planner:
                     f"running {name}() takes exactly one argument")
             else:
                 in_col = _input_col(args[0], f"{name}() argument", i)
-            out_name = _fresh(f"__rw_out{i}")
+            out_name = fresh(f"__rw_out{i}")
             aggs.append((name, in_col, out_name))
-            wf_map[id(e)] = out_name
+            wf_cols.append((e, out_name))
 
         for h, expr in hidden:
             df = df.withColumn(h, self._compile(expr, df))
@@ -2719,18 +2720,12 @@ class Planner:
         # qualified column refs (resolver qualifies every Col by its
         # leaf) still resolve on the stateful output
         out = out.alias(leaves[0].binding)
-        # install the substitution map LAST: every raise above leaves
-        # it untouched, so a failed plan can never poison a later
-        # compile through a recycled AST id (the caller clears it
-        # after the projection compiles)
-        self._stream_wf_cols = wf_map
         if stateful:
             self._stateful_passes = getattr(
                 self, "_stateful_passes", 0) + 1
-        return out
+        return out, wf_cols
 
-    def _compile_window_func(self, e: WindowFunc, df,
-                             compile=None) -> Column:
+    def _compile_window_func(self, e: WindowFunc, df) -> Column:
         """Analytic OVER clause (engine extension, SURVEY.md §2.5 —
         the reference has none).  Maps 1:1 onto pyspark.sql.Window:
         ranking/offset/value functions compile directly, aggregate
@@ -2744,8 +2739,6 @@ class Planner:
         beyond the partition sort itself."""
         from pyspark.sql import Window as SW
 
-        comp = compile if compile is not None \
-            else (lambda x: self._compile(x, df))
         name = e.func.name
         if e.ref is not None:
             # parser resolves WINDOW-clause refs in select items and
@@ -2760,10 +2753,6 @@ class Planner:
             msg = null_treatment_error(name)
             if msg:
                 raise PlanError(msg)
-        mapped = self._stream_wf_cols.get(id(e))
-        if mapped is not None:
-            # already computed by the stateful running_agg pass
-            return F.col(mapped)
         if df.isStreaming:
             raise PlanError(
                 "window functions on streams support only running "
@@ -2777,10 +2766,10 @@ class Planner:
             raise PlanError(
                 f"DISTINCT is not supported in window function {name}()")
 
-        w = SW.partitionBy(*[comp(p) for p in e.partition_by])
+        w = SW.partitionBy(*[self._compile(p, df) for p in e.partition_by])
         if e.order_by:
             w = w.orderBy(*[
-                _sorted_col(comp(o.expr), o)
+                _sorted_col(self._compile(o.expr, df), o)
                 for o in e.order_by])
         elif name in self._RANKING_FUNCS or name in self._OFFSET_FUNCS:
             raise PlanError(
@@ -2852,7 +2841,7 @@ class Planner:
                 # ``lag(...) IGNORE NULLS`` expression.  (ORDER BY
                 # presence was already enforced above for offset
                 # functions.)
-                y = comp(args[0])
+                y = self._compile(args[0], df)
                 nn = y.isNotNull()
                 # a negative offset flips direction on both engines:
                 # lag(x, -k) IGNORE NULLS == lead(x, k) IGNORE NULLS
@@ -2870,7 +2859,7 @@ class Planner:
             # without IGNORE NULLS (null treatment skips *prior* rows
             # only — pinned by test vs DuckDB's in-paren spelling)
             fn = F.lag if name == "lag" else F.lead
-            col = fn(comp(args[0]), off, dflt)
+            col = fn(self._compile(args[0], df), off, dflt)
         elif name == "nth_value":
             # frame-sensitive like first/last_value, but the picked
             # row index makes an unordered partition nondeterministic,
@@ -2886,12 +2875,14 @@ class Planner:
             if not e.order_by:
                 raise PlanError(
                     "nth_value() requires ORDER BY in its OVER clause")
-            col = F.nth_value(comp(args[0]), n, e.ignore_nulls)
+            col = F.nth_value(self._compile(args[0], df), n,
+                              e.ignore_nulls)
         elif name in self._VALUE_FUNCS:
             if len(args) != 1:
                 raise PlanError(f"{name}() takes exactly one argument")
             fn = F.first if name == "first_value" else F.last
-            col = fn(comp(args[0]), ignorenulls=e.ignore_nulls)
+            col = fn(self._compile(args[0], df),
+                     ignorenulls=e.ignore_nulls)
         elif self.registry.is_aggregate(name):
             if args and isinstance(args[0], Star):
                 if name != "count":
@@ -2899,7 +2890,7 @@ class Planner:
                 col = F.count(F.lit(1))
             else:
                 col = self.registry.build(
-                    name, [comp(a) for a in args])
+                    name, [self._compile(a, df) for a in args])
         else:
             raise PlanError(
                 f"{name}() is not a supported window function "
@@ -2918,135 +2909,42 @@ class Planner:
         return -b[1] if b[0] == "preceding" else b[1]
 
 
-class _AggContext:
-    """Compile expressions evaluated per-group: aggregate calls map to
-    aggregates over pre-projected ``__a{j}`` columns; grouping expressions
-    map to ``__g{i}`` refs; literals pass through."""
+class _Scope:
+    """The substitutions Planner._compile applies before compiling a
+    node — one object for every context that swaps an AST node for an
+    already computed column:
 
-    def __init__(self, planner: Planner, group_exprs, g_names,
-                 agg_calls, arg_names):
-        self.p = planner
-        self.group_exprs = group_exprs
-        self.g_names = g_names
-        self.agg_calls = agg_calls
-        self.arg_names = arg_names
+      * aggregation: a grouping expression -> ``__g{i}``; an aggregate
+        call -> its aggregate over the ``__a{j}`` arguments, or, after
+        the groupBy, its hidden ``__w{n}`` output;
+      * streaming OVER: a running window function -> its column from
+        the stateful pass;
+      * streaming count/delta windows: an aggregate call -> its
+        stateful output, a key column -> its output name;
+      * QUALIFY: an unbound projection alias -> its hidden column.
 
-    def compile(self, e) -> Column:
-        # grouping expression match (structural equality via dataclasses)
-        for i, g in enumerate(self.group_exprs):
-            if e == g:
-                return F.col(self.g_names[i])
-        if isinstance(e, FuncCall):
-            if self.p.registry.is_aggregate(e.name):
-                return self._agg(e)
-            # scalar function over aggregate context, e.g. round(sum(x), 2)
-            return self.p.registry.build(
-                e.name, [self.compile(a) for a in e.args])
-        if isinstance(e, Lit):
-            return F.lit(e.value)
-        if isinstance(e, Param):
-            return F.lit(self.p._bind_param(e))
-        if isinstance(e, BinOp):
-            if e.op in ("<<", ">>"):
-                if not isinstance(e.right, Lit):
-                    raise PlanError("shift amount must be a literal")
-                n = int(e.right.value)
-                l = self.compile(e.left)
-                return F.shiftleft(l, n) if e.op == "<<" else F.shiftright(l, n)
-            return _apply_binop(e.op, self.compile(e.left),
-                                self.compile(e.right))
-        if isinstance(e, UnOp):
-            x = self.compile(e.operand)
-            return {"not": lambda: ~x, "-": lambda: -x,
-                    "~": lambda: F.bitwise_not(x)}[e.op]()
-        if isinstance(e, Case):
-            c = None
-            for cond, val in e.whens:
-                cc, vv = self.compile(cond), self.compile(val)
-                c = F.when(cc, vv) if c is None else c.when(cc, vv)
-            if e.else_ is not None:
-                c = c.otherwise(self.compile(e.else_))
-            return c
-        if isinstance(e, Cast):
-            return self.compile(e.expr).cast(_cast_type(e))
-        if isinstance(e, IntervalLit):
-            return F.expr(f"INTERVAL {e.value} {e.unit}")
-        if isinstance(e, Subscript):
-            return F.try_element_at(self.compile(e.expr),
-                                    self.compile(e.index))
-        if isinstance(e, Between):
-            c = self.compile(e.expr).between(
-                self.compile(e.lo), self.compile(e.hi))
-            return ~c if e.negated else c
-        if isinstance(e, IsNull):
-            x = self.compile(e.expr)
-            return x.isNotNull() if e.negated else x.isNull()
-        if isinstance(e, InList):
-            x = self.compile(e.expr)
-            c = x.isin(*[self.compile(i) for i in e.items])
-            return ~c if e.negated else c
-        if isinstance(e, Col):
-            raise PlanError(
-                f"column {e.name!r} must appear in GROUP BY or inside an "
-                "aggregate function")
-        raise PlanError(
-            f"cannot compile {type(e).__name__} in aggregate context")
+    Keys match by AST equality (dataclass ``==``), never by object
+    identity.  ``grouped`` rejects any column no substitution covers
+    (a bare column outside GROUP BY)."""
 
-    def _agg(self, call: FuncCall) -> Column:
-        specs = self.arg_names[id(call)]
-        name = call.name.lower()
-        if specs is None:                        # count(*)
-            return F.count(F.lit(1))
-        if call.distinct:
-            if len(specs) != 1 or specs[0][0] != "col":
-                raise PlanError(
-                    f"{name}(DISTINCT ...) takes one column argument")
-            hidden = specs[0][1]
-            if name == "count":
-                return F.countDistinct(F.col(hidden))
-            if name == "sum":
-                return F.sum_distinct(F.col(hidden))
-            # general distinct aggregate over a named hidden column
-            return F.expr(f"{name}(DISTINCT {hidden})")
-        args = [F.col(v) if kind == "col" else F.lit(v)
-                for kind, v in specs]
-        return self.p.registry.build(name, args)
+    __slots__ = ("subs", "aliases", "grouped")
 
+    def __init__(self, subs, aliases, grouped):
+        self.subs = list(subs)        # [(Expr, column name | builder)]
+        self.aliases = aliases or {}  # lowercase alias -> column name
+        self.grouped = grouped
 
-class _PostAggContext(_AggContext):
-    """Compile expressions AFTER aggregation: grouping expressions and
-    aggregate calls resolve to the aggregated frame's columns (the
-    ``__g{i}`` keys and ``__w{n}`` hidden aggregate outputs), and
-    window functions compile over that frame — the ANSI evaluation
-    order for `rank() over (order by sum(x)) … group by g`."""
-
-    def __init__(self, planner, group_exprs, g_names, agg_cols, res):
-        super().__init__(planner, group_exprs, g_names, [], {})
-        self.agg_cols = agg_cols        # list[(FuncCall, hidden_name)]
-        self.res = res
-        # QUALIFY alias substitution (lowercase output alias -> hidden
-        # column of the aggregated frame); set only while the QUALIFY
-        # predicate compiles
-        self.alias_map: Optional[dict] = None
-
-    def compile(self, e) -> Column:
-        if self.alias_map is not None and isinstance(e, Col) \
-                and e.binding is None:
-            hid = self.alias_map.get(e.name.lower())
+    def find(self, e):
+        """The column name (or zero-argument Column builder) that
+        replaces ``e``, or None."""
+        if isinstance(e, Col) and e.binding is None:
+            hid = self.aliases.get(e.name.lower())
             if hid is not None:
-                return F.col(hid)
-        if isinstance(e, WindowFunc):
-            return self.p._compile_window_func(
-                e, self.res, compile=self.compile)
-        return super().compile(e)
-
-    def _agg(self, call: FuncCall) -> Column:
-        for c, h in self.agg_cols:
-            if call == c:
-                return F.col(h)
-        raise PlanError(
-            f"internal: aggregate {call.name}() inside a window item "
-            "was not materialized")
+                return hid
+        for key, sub in self.subs:
+            if e == key:
+                return sub
+        return None
 
 
 def _ordinal(e) -> Optional[int]:
@@ -3081,7 +2979,7 @@ def _expr_contains_winfunc(e) -> bool:
 
 
 def _apply_binop(op: str, l: Column, r: Column) -> Column:
-    """Operator table shared by both compile contexts.
+    """Operator table of the expression compiler.
     ``/`` and ``%`` use try_divide/try_mod: nullable results with NULL
     on a zero divisor, matching the reference's nullable-Double division
     rule (flinkdsl/typer.scala_:243-244) even under Spark 4's

@@ -39,6 +39,7 @@ from pyspark.sql.types import (DoubleType, LongType, StructField,
                                StructType)
 
 from ..errors import PlanError
+from .windows import fresh_namer
 
 _SUPPORTED = ("sum", "count", "min", "max", "avg")
 
@@ -81,7 +82,7 @@ def count_window_agg(sdf: DataFrame,
                   else list(order_col or []))
 
     agg_cols = [c for _f, c, _a in aggs]
-    gk = _fresh_name("__gk", sdf.columns)
+    gk = fresh_namer(sdf.columns)("__gk")
     keyed = sdf if key_cols else sdf.withColumn(gk, _lit0())
     group_keys = key_cols if key_cols else [gk]
 
@@ -164,7 +165,7 @@ def delta_window_agg(sdf: DataFrame,
         raise PlanError("window size/every must be positive")
 
     agg_cols = [c for _f, c, _a in aggs]
-    gk = _fresh_name("__gk", sdf.columns)
+    gk = fresh_namer(sdf.columns)("__gk")
     keyed = sdf if key_cols else sdf.withColumn(gk, _lit0())
     group_keys = key_cols if key_cols else [gk]
     key_fields = [keyed.schema[k] for k in group_keys]
@@ -290,19 +291,6 @@ def _emit(key, win_val, bufs, aggs):
 def _lit0():
     from pyspark.sql import functions as F
     return F.lit(0)
-
-
-def _fresh_name(base: str, taken) -> str:
-    """A bookkeeping column name that cannot shadow an input column —
-    withColumn silently REPLACES same-named columns (the __tb_*/__rw_*
-    collision class), so every synthesized name derives from the
-    actual schema."""
-    name, i = base, 0
-    taken = set(taken)
-    while name in taken:
-        i += 1
-        name = f"{base}_{i}"
-    return name
 
 
 def _arr_double():
@@ -615,7 +603,7 @@ def running_agg(sdf: DataFrame,
     rank_base = last_base + len(lasts)
     lk_base = rank_base + len(ranks)
 
-    gk = _fresh_name("__gk", sdf.columns)
+    gk = fresh_namer(sdf.columns)("__gk")
     keyed = sdf if key_cols else sdf.withColumn(gk, _lit0())
     group_keys = key_cols if key_cols else [gk]
     agg_cols = [c for _f, c, _a in aggs]

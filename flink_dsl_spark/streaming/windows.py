@@ -60,6 +60,25 @@ _TIME_UNIT_STR = {
 }
 
 
+def fresh_namer(columns) -> Callable[[str], str]:
+    """Bookkeeping column names that cannot shadow an input column —
+    withColumn silently REPLACES a same-named column, so every
+    synthesized name derives from the actual schema.  ``columns`` is
+    read once (each ``df.columns`` is an analysis round-trip); the
+    returned ``fresh(base)`` yields ``base``, else ``base_1``,
+    ``base_2``, ..., never a name it issued before."""
+    taken = set(columns)
+
+    def fresh(base: str) -> str:
+        name, i = base, 0
+        while name in taken:
+            i += 1
+            name = f"{base}_{i}"
+        taken.add(name)
+        return name
+    return fresh
+
+
 def duration_str(p: Policy) -> str:
     return f"{p.value} {_TIME_UNIT_STR[p.unit]}"
 

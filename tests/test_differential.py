@@ -82,7 +82,9 @@ def _query(draw):
             sql = sql.replace("select ", "select distinct ", 1)
         return sql
     if shape == 1:
-        # grouped aggregation (+ optional having)
+        # grouped aggregation (+ optional having / order by): HAVING
+        # and ORDER BY draw expressions over the group key and
+        # aggregates — the planner's per-group compile scope
         cols = _NATION_INTS
         fn = draw(st.sampled_from(["sum", "count", "min", "max", "avg"]))
         arg = draw(_int_expr(cols))
@@ -91,8 +93,20 @@ def _query(draw):
         if draw(st.booleans()):
             sql += f" where {draw(_predicate(cols))}"
         sql += " group by n_regionkey"
-        if draw(st.booleans()):
+        # integer-valued aggregates only (exact arithmetic)
+        aggs = ["count(*)", "sum(n_nationkey)", "max(n_nationkey)",
+                "min(n_nationkey % 5)"]
+        if fn != "avg":
+            aggs.append(f"{fn}({arg})")
+        having = draw(st.integers(0, 2))
+        if having == 1:
             sql += f" having count(*) > {draw(st.integers(0, 3))}"
+        elif having == 2:
+            sql += (" having "
+                    f"{draw(_predicate(['n_regionkey'] + aggs))}")
+        if draw(st.booleans()):
+            sql += (f" order by {draw(st.sampled_from(aggs))} - "
+                    f"{draw(_int_expr(['n_regionkey'] + aggs))} desc")
         return sql
     if shape == 2:
         # join + projection (all four join types; optional 3-way chain)

@@ -64,6 +64,15 @@ def test_agg_is_partial_then_final(spark, queries):
     assert "partial_sum" in plan
 
 
+def test_repeated_aggregate_call_computed_once(spark, queries):
+    """q49 writes sum(o_totalprice) twice — as an output item and as
+    the window's order key.  Aggregate calls match by AST equality, so
+    the grouped plan aggregates it once per group, not once per
+    occurrence."""
+    plan = plan_of(queries["q49_qualify"](spark, SF), mode="simple")
+    assert plan.count("partial_sum(") == 1
+
+
 def test_order_limit_is_take_ordered(spark, queries):
     """ORDER BY + LIMIT must plan as TakeOrderedAndProject (per-partition
     top-n + driver merge), never a global Sort."""

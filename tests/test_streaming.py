@@ -495,6 +495,11 @@ def test_fsql_count_window_expression_aggs_and_having(spark, sdf):
         ("u0", 1, 12.0, "lo"), ("u0", 2, 20.0, "hi"),
         ("u1", 1, 13.0, "lo"), ("u1", 2, 21.0, "hi"),
     }
+    # a bare column that is neither a key nor inside an aggregate
+    # is rejected at plan time
+    with pytest.raises(PlanError, match="must appear in GROUP BY"):
+        eng.sql("select user, value, count(*) as n "
+                "from ev [size 4 partitioned on user] group by user")
 
 
 def test_fsql_delta_sliding_streaming_matches_batch(spark, sdf, src_dir):

@@ -813,24 +813,27 @@ def test_running_agg_validates_inputs(spark, src_dir):
 
 def test_failed_plan_leaves_no_substitution_residue(spark, src_dir):
     """r9 review: a plan that fails AFTER some window functions
-    validated (mixed partition specs) must leave the id()-keyed
-    substitution map empty — a leaked entry could poison a later
-    compile through a recycled AST id."""
+    validated (mixed partition specs) must leave no substitution scope
+    behind — a leaked one would rewrite a later statement's compile."""
     eng = _stream_engine(spark, src_dir)
     with pytest.raises(PlanError, match="share the same PARTITION BY"):
         eng.sql(f"select sum(value) {_OVER} as a, sum(value) over ("
                 f"partition by small order by ts, event_id rows between "
                 f"unbounded preceding and current row) as b from ev")
-    assert eng.planner._stream_wf_cols == {}
+    assert eng.planner._scope is None
     # and the engine still plans both batch and streaming OVER cleanly
     beng = FsqlEngine(spark)
     beng.register("ev", spark.read.parquet(src_dir))
     assert beng.sql(
         "select event_id, row_number() over (order by event_id) as rn "
         "from ev").count() == 24
+    # a failed grouped compile restores the scope too
+    with pytest.raises(PlanError, match="must appear in GROUP BY"):
+        beng.sql("select user, value from ev group by user")
+    assert beng.planner._scope is None
     out = eng.sql(f"select event_id, sum(value) {_OVER} as rs from ev")
     assert out.isStreaming
-    assert eng.planner._stream_wf_cols == {}     # cleared after compile
+    assert eng.planner._scope is None            # cleared after compile
 
 
 def test_running_over_join_from_rejected(spark, src_dir):
@@ -996,11 +999,11 @@ def test_streaming_qualify_ranking_still_rejected(spark, src_dir):
     with pytest.raises(PlanError, match="running aggregates"):
         eng.sql("select event_id, percent_rank() over (partition by "
                 "user order by ts) as pr from ev qualify pr <= 0.5")
-    assert eng.planner._stream_wf_cols == {}
+    assert eng.planner._scope is None
     with pytest.raises(PlanError, match="running aggregates"):
         eng.sql("select event_id, ntile(4) over (partition by user "
                 "order by ts) as nt from ev qualify nt = 1")
-    assert eng.planner._stream_wf_cols == {}
+    assert eng.planner._scope is None
 
 
 def test_streaming_group_by_with_window_rejected_cleanly(spark, src_dir):
